@@ -70,9 +70,7 @@ class ConversationStats:
         eng = self.engine
         state = eng.table.read(partitions=parts)
         if eng.mode == "mor":
-            from radiant_portal_pipeline_spark.cdc.dedup import lww_dedup
-
-            state = lww_dedup(state, eng.key_cols, [eng.lsn_col])
+            state = eng.lww_read(state)
         live = state.filter(~F.col(S.DELETED_COL))
         agg = self._aggregate(live)
         self.table.overwrite_partitions(

@@ -22,16 +22,16 @@ SURVEY.md §2.5 W1). Three physical strategies, one semantics:
   **SortAggregate** — the full input sorts on both sides of the
   exchange. Kept as the general fallback: it supports multiple order
   columns and payload types that can't be grouping keys (maps).
-- ``window``: the reference's literal ROW_NUMBER plan, for parity
-  tests.
+- ``window``: the reference's ROW_NUMBER plan, used for MoR reads.
+  Spark plans the top-1 as a map-side partial group limit, ONE
+  exchange on the keys, then the final top-1 (argmax: 2 scans, 3).
 
-Tie semantics (identical for all three): ``order_cols`` must identify
-the winner uniquely — equal-order rows may only be VERBATIM duplicates
-(the CDC replay/at-least-once case), which ``argmax`` collapses via
-``distinct`` and ``max_struct`` via lexicographic struct comparison
-(equal rows compare equal). Rows that share key+order but differ in
-payload would be resolved arbitrarily by either plan and are a contract
-violation upstream.
+Ties: verbatim duplicates at equal order (at-least-once replay)
+collapse in every plan. Rows sharing key+order but differing in
+payload violate the upstream contract: ``argmax`` keeps all of them,
+``max_struct`` keeps the greatest, and ``window`` orders the remaining
+non-map columns descending after ``order_cols`` — the same row wins
+whatever the input order.
 """
 
 from __future__ import annotations
@@ -160,7 +160,12 @@ def lww_dedup(
         else:
             via = "max_struct"
     if use_window:
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
+        ties = [  # every other orderable column: a fixed tie order
+            f.name for f in df.schema.fields
+            if f.name not in {*keys, *order_cols}
+            and "map<" not in f.dataType.simpleString()
+        ]
+        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols + ties])
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

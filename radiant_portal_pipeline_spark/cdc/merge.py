@@ -9,9 +9,9 @@ Semantics (the reference's incremental protocol, re-expressed Spark-first
    a no-op, which makes ``foreachBatch`` exactly-once
    (reference: ``ingested_at`` watermark advanced only post-run,
    sequencing_experiment_update.sql:1-3 + import_part.py:588-622).
-2. **LWW dedup** — max-struct aggregation per ``(conv_id, turn_idx)``
-   on ``lsn`` (reference W1 row_number pattern) with map-side partial
-   combine, so hot conversations reduce before the shuffle.
+2. **LWW dedup** — per ``(conv_id, turn_idx)`` on ``lsn`` (reference
+   W1 row_number pattern): argmax on the write path, a top-1 window on
+   reads and compaction; both combine map-side before the shuffle.
 3. **Partition pruning** — ``part = pmod(xxhash64(conv_id), buckets)``;
    only partitions present in the batch are touched.
 4. **Deletes** become tombstones (``_deleted = true``) that keep their
@@ -26,9 +26,9 @@ Two physical strategies (same logical semantics, verified equal):
 
 - **merge-on-read (default, ``mode="mor"``)** — the batch is LWW-
   deduped and APPENDED; no existing data is read or rewritten on the
-  write path. Reads apply the LWW max-struct over (possibly) multiple
-  versions per key; ``compact()`` folds partitions back to one row per
-  key. This is the Iceberg MoR design: write amplification O(batch)
+  write path. Reads resolve LWW over (possibly) multiple versions per
+  key (``lww_read``); ``compact()`` folds partitions back to one row
+  per key. This is the Iceberg MoR design: write amplification O(batch)
   instead of O(table), the right trade at 10^10 events where most
   buckets receive a few rows per batch. Compaction is incremental and
   partition-scoped, so it parallelizes and can run on a schedule.
@@ -54,7 +54,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from radiant_portal_pipeline_spark.cdc import schemas as S
-from radiant_portal_pipeline_spark.cdc.dedup import lww_dedup
+from radiant_portal_pipeline_spark.cdc.dedup import (
+    argmax_eligible,
+    argmax_winner_rows,
+    lww_dedup,
+)
 from radiant_portal_pipeline_spark.lake import LakeTable
 
 _SRC_RANK = "_src_rank"  # tie-break: batch row beats existing row at equal lsn
@@ -276,8 +280,6 @@ class TranscriptMergeEngine:
         so replays choose the same plan); an empty sample falls back to
         the scale-safe two_phase. Returns (plan, reason) — the reason
         goes to lineage so operators can audit choices."""
-        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
         keys = [S.PART_COL, *self.key_cols]
         if argmax_eligible(df, keys, [self.lsn_col]):
             # One FULL-COVERAGE estimator job decides both remaining
@@ -476,7 +478,7 @@ class TranscriptMergeEngine:
         )
 
     def _dedup_and_layout(
-        self, df: DataFrame, keys, order_cols, plan: str | None = None,
+        self, df: DataFrame, keys, order_cols, plan: str,
         source_bucketed: bool = False,
     ) -> DataFrame:
         """LWW + write layout, per ``merge_plan``.
@@ -509,13 +511,6 @@ class TranscriptMergeEngine:
         Both legacy plans are kept selectable as the comparison
         baselines and as the fallback for schemas the argmax plan can't
         serve (multi-column ordering, map-typed payloads)."""
-        plan = plan or self.merge_plan
-        if plan == "adaptive":  # callers resolve per batch; stay safe here
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
-            plan = (
-                "argmax" if argmax_eligible(df, keys, order_cols) else "two_phase"
-            )
         if plan == "append_only":
             # write-path dedup elided (insert-dominant batch, MoR):
             # read-side LWW resolves any duplicates; compact() folds
@@ -532,8 +527,6 @@ class TranscriptMergeEngine:
             # every plan needs. coalesce(.., False) sends NULL-conv
             # rows to the tail so the part column's raise_error guard
             # still reaches them.
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_winner_rows
-
             if self.merge_plan == "hot_split":
                 # STATIC plan: probe THIS batch, never cache across
                 # batches — a first insert-only batch would otherwise
@@ -574,8 +567,6 @@ class TranscriptMergeEngine:
             )
             return out.repartition(self.num_buckets, F.col(S.PART_COL))
         if plan in ("argmax", "argmax_broadcast"):
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_winner_rows
-
             # layout repartition BETWEEN the semi join and the verbatim-
             # replay distinct: the distinct's ClusteredDistribution is
             # then satisfied by hashpartitioning(part) (subset rule), so
@@ -850,8 +841,16 @@ class TranscriptMergeEngine:
         pruned = self.table.read(skip={self.lsn_col: (lsn_exclusive + 1, None)})
         df = pruned.filter(F.col(self.lsn_col) > lsn_exclusive)
         if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
+            df = self.lww_read(df)
         return df
+
+    def lww_read(self, df: DataFrame, keys: list | None = None) -> DataFrame:
+        """MoR last-writer-wins per ``keys`` (default: the merge keys)
+        as a top-1 window: one scan, one exchange. At an equal lsn the
+        tombstone wins, then a fixed payload order (``lww_dedup``)."""
+        return lww_dedup(
+            df, keys or self.key_cols, [self.lsn_col, S.DELETED_COL], use_window=True
+        )
 
     def compact(
         self,
@@ -906,51 +905,32 @@ class TranscriptMergeEngine:
                 ]
         if not parts:
             return []
-        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
         fold_in = self.table.read(partitions=parts, version=base_version)
         keys = [S.PART_COL, *self.key_cols]
-        # NEVER inherit an append_only engine default here: folding is
-        # compaction's entire purpose. But DO give LARGE folds the same
-        # broadcast upgrade the apply path has: one thin estimator job
-        # bounds the distinct-key count, and a bounded fold runs the
-        # broadcast semi join — zero full-row exchanges before the
-        # layout repartition — instead of shuffling every table row
-        # through the SHUFFLE_HASH join (an update-heavy table folds
-        # many appended versions down to few keys, exactly the
-        # broadcast shape). Small folds skip the estimator outright:
-        # the A/B is a wash up to ~70 MB (fixed costs dominate; the
-        # extra job costs what the saved exchange saves) and the
-        # broadcast wins 10-35% at an 858 MB / 32M-row fold (round-6
-        # measurements). The size gate reads the manifest's per-file
-        # _bytes — zero Spark jobs; files with unknown size count as
-        # large (conservative toward estimating, never toward skipping
-        # a profitable upgrade). Unbounded folds keep shuffled argmax.
-        plan = "adaptive"
-        fold_bytes = 0
-        stats_known = True
-        for p in parts:
-            for f in snap.files.get(p, []):
-                b = snap.stats.get(f, {}).get("_bytes")
-                if b is None:
-                    stats_known = False
-                else:
-                    fold_bytes += int(b)
-        big_fold = (not stats_known) or fold_bytes >= self.compact_broadcast_min_bytes
+        # The fold is the read-side window behind the layout
+        # repartition, whose hashpartitioning(part) satisfies the
+        # window's (part, conv_id, turn_idx) clustering: ONE exchange.
+        # Large folds (manifest _bytes, zero Spark jobs; unknown sizes
+        # count as large) whose estimated distinct keys fit the bound
+        # take the apply path's broadcast semi join instead: a wash
+        # below ~70 MB, 10-35% faster at 858 MB / 32M rows (round 6).
+        sizes = [
+            snap.stats.get(f, {}).get("_bytes")
+            for p in parts
+            for f in snap.files.get(p, [])
+        ]
+        big_fold = None in sizes or sum(sizes) >= self.compact_broadcast_min_bytes
+        est = None
         if big_fold and argmax_eligible(fold_in, keys, [self.lsn_col]):
             est = self._estimate_batch(fold_in)
-            if (
-                est is not None
-                and est["n"]
-                and est["nk"] <= self.broadcast_max_winners
-            ):
-                plan = "argmax_broadcast"
-        folded = self._dedup_and_layout(
-            fold_in,
-            keys,
-            [self.lsn_col],
-            plan=plan,
-        )
+        if est is not None and est["n"] and est["nk"] <= self.broadcast_max_winners:
+            folded = self._dedup_and_layout(
+                fold_in, keys, [self.lsn_col], plan="argmax_broadcast"
+            )
+        else:
+            folded = self.lww_read(
+                fold_in.repartition(self.num_buckets, F.col(S.PART_COL)), keys
+            )
         if purge_tombstones_below is not None:
             folded = folded.filter(
                 ~(
@@ -1021,7 +1001,7 @@ class TranscriptMergeEngine:
         )
         df = self.table.read(version=snap0.version)
         if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
+            df = self.lww_read(df)
         folded = df.drop(S.PART_COL)
         relaid = folded.withColumn(
             S.PART_COL, part_expr(self.key_cols[0], new_buckets)
@@ -1047,10 +1027,7 @@ class TranscriptMergeEngine:
         )
 
     def current_state(self, include_meta: bool = False) -> DataFrame:
-        df = self.table.read()
-        if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
-        df = df.filter(~F.col(S.DELETED_COL))
+        df = self.raw_state().filter(~F.col(S.DELETED_COL))
         if include_meta:
             return df
         return df.drop(S.DELETED_COL, S.PART_COL)
@@ -1059,7 +1036,7 @@ class TranscriptMergeEngine:
         """Post-LWW rows INCLUDING tombstones (lineage/debug view)."""
         df = self.table.read()
         if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
+            df = self.lww_read(df)
         return df
 
     def applied_lsn_watermarks(self) -> DataFrame:

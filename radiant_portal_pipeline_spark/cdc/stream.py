@@ -112,7 +112,11 @@ def tombstone_gc_hook(
     window — LineageWriter.safe_purge_watermark). Guards above the
     watermark stay, so a straggler that can still legally arrive keeps
     being suppressed. ``every`` runs the (partition-scoped) compaction
-    on every k-th applied batch."""
+    on every k-th applied batch.
+
+    The purge ignores consumer positions: a ``changes_since`` consumer
+    must read BEFORE this hook in the same batch (call it first in
+    ``on_batch``), or it never sees the purged deletes."""
     state = {"applied": 0}
 
     def hook(stats: MergeStats) -> None:

@@ -61,7 +61,10 @@ def range_bin_join(
     span_ok = (F.col(hi_col) >= F.col(lo_col)) & (
         hi_bin - lo_bin < F.lit(max_bins_per_interval)
     )
-    bins = F.when(span_ok, F.sequence(lo_bin, hi_bin)).otherwise(
+    # clamped in its own arguments: Catalyst constant-folds literal
+    # bounds on the driver before the when() guard can raise
+    hi_cap = F.least(hi_bin, lo_bin + max_bins_per_interval)
+    bins = F.when(span_ok, F.sequence(lo_bin, hi_cap)).otherwise(
         F.raise_error(
             F.lit(
                 f"range_bin_join: interval spans more than "
@@ -116,7 +119,8 @@ def range_bin_overlap_join(
         ok = (F.col(hi) >= F.col(lo)) & (
             hi_bin - lo_bin < F.lit(max_bins_per_interval)
         )
-        bins = F.when(ok, F.sequence(lo_bin, hi_bin)).otherwise(
+        hi_cap = F.least(hi_bin, lo_bin + max_bins_per_interval)
+        bins = F.when(ok, F.sequence(lo_bin, hi_cap)).otherwise(
             F.raise_error(
                 F.lit(
                     f"range_bin_overlap_join: interval spans more than "

@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(24g, ~60 % of physical RAM): a heap above the host's RAM
+    turns a runaway driver allocation into a kernel OOM kill."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(24 << 10, ram_mb * 6 // 10)}m"
+
+
 def get_spark(
     app_name: str = "radiant_portal_pipeline_spark",
     master: str | None = None,
@@ -43,7 +50,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     # deployment/config escape hatch: ";"-separated key=value pairs,
     # applied before the caller's extra_conf (so code-level settings

@@ -342,6 +342,36 @@ def test_merge_prepare_argmax_broadcast_zero_fullrow_exchanges(spark):
     assert plan.count("Exchange hashpartitioning") == 2, plan  # winners + layout
 
 
+def test_mor_reads_and_compact_fold_run_one_exchange(spark, tmp_path):
+    """MoR read-side LWW is the top-1 window: one scan and ONE exchange
+    (map-side partial group limit below the key exchange) for
+    changes_since and current_state, where the argmax plan needs three.
+    Below the broadcast gate, compact()'s fold is the same window behind
+    the layout repartition, whose hashpartitioning(part) satisfies the
+    window's (part, conv_id, turn_idx) clustering — one exchange in
+    total."""
+    tbl = TranscriptMergeEngine.create_table(
+        spark, str(tmp_path / "t"), num_buckets=8
+    )
+    eng = TranscriptMergeEngine(tbl, num_buckets=8)
+    for epoch in range(2):
+        eng.merge_batch(synthetic_feed(spark, 2000), epoch=epoch)
+    for df in (eng.changes_since(0), eng.current_state()):
+        plan = plan_of(df, mode="simple")
+        assert plan.count("Exchange") == 1, plan
+        assert "WindowGroupLimit" in plan, plan
+    folds = []
+    write = tbl.overwrite_partitions
+    tbl.overwrite_partitions = lambda df, **kw: (
+        folds.append(plan_of(df, mode="simple")), write(df, **kw)
+    )[1]
+    eng.compact()
+    (plan,) = folds
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(part#" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_range_bin_join_shuffles_on_key_and_bin(spark):
     """q38's scale mechanism: with a 24-value equi key the join must
     shuffle on (key, bin), not the bare key — otherwise entire
